@@ -85,6 +85,7 @@ def main(argv: list[str] | None = None) -> None:
                       "mvt_tree_bytes": tree["n_bytes"]})
     stats.update({"salt": salt, "wall_sec": round(time.time() - t0, 1),
                   "n_features": feats.count()})
+    feats.unpersist()
     print(json.dumps(stats))
     spark.stop()
 

@@ -110,6 +110,7 @@ def run_tile_job(spark: SparkSession, features: DataFrame, out_dir: str,
     from .tiles import build_tile_features
     from .mvt import encode_tiles
 
+    from pyspark import StorageLevel
     from pyspark.sql import Observation
 
     from ..sources.catalog import cluster_tiles
@@ -127,33 +128,41 @@ def run_tile_job(spark: SparkSession, features: DataFrame, out_dir: str,
     todo = ckpt.pending(zooms, stage=stage)
     skipped = len(zooms) - len(todo)
     total_tiles = 0
-    features = features.cache()
-    for z in todo:
-        started = time.time()
-        obs = Observation(f"tiles-z{z}-{run_id}")
-        tiles = build_tile_features(features, [z], salt=salt)
-        if mvt:
-            tiles = encode_tiles(tiles, split_layers=split_layers)
-        tiles = tiles.observe(
-            obs, F.count(F.lit(1)).alias("tiles"), F.sum("n_features").alias("feature_rows"))
-        out_path = os.path.join(out_dir, f"z={z}")
-        # O2 sink clustering: few files per zoom, rows sorted (z,x,y) inside
-        cluster_tiles(tiles).write.mode("overwrite").parquet(out_path)  # idempotent per zoom
-        got = obs.get  # free — piggybacks on the sink action (S5/A3 metrics)
-        n_tiles = int(got["tiles"])
-        feature_rows = int(got["feature_rows"] or 0)
-        total_tiles += n_tiles
-        lineage = (f"pages>latest_per_url>extract>parse_geo>validity>"
-                   f"assign(z={z})>clip>quantize>collect_list"
-                   f"|observed_feature_rows={feature_rows}")
-        summary = zoom_summary_row(spark, z, stage, run_id, started, lineage,
-                                   input_rows=feature_rows, output_rows=n_tiles)
-        if n_tiles > 0:
-            written = spark.read.parquet(out_path)
-            ckpt.commit(summary.unionByName(
-                partition_metrics(written, z, stage, run_id, started, lineage)))
-        else:
-            # zero-tile zooms still commit: completed_zooms must record them
-            # or every resume re-runs the empty zoom forever
-            ckpt.commit(summary)
+    # a cache this call makes for the zoom loop is dropped on return; a
+    # caller's own persist (same plan already cached) is left alone
+    owns_cache = features.storageLevel == StorageLevel.NONE
+    if owns_cache:
+        features = features.cache()
+    try:
+        for z in todo:
+            started = time.time()
+            obs = Observation(f"tiles-z{z}-{run_id}")
+            tiles = build_tile_features(features, [z], salt=salt)
+            if mvt:
+                tiles = encode_tiles(tiles, split_layers=split_layers)
+            tiles = tiles.observe(
+                obs, F.count(F.lit(1)).alias("tiles"), F.sum("n_features").alias("feature_rows"))
+            out_path = os.path.join(out_dir, f"z={z}")
+            # O2 sink clustering: few files per zoom, rows sorted (z,x,y) inside
+            cluster_tiles(tiles).write.mode("overwrite").parquet(out_path)  # idempotent per zoom
+            got = obs.get  # free — piggybacks on the sink action (S5/A3 metrics)
+            n_tiles = int(got["tiles"])
+            feature_rows = int(got["feature_rows"] or 0)
+            total_tiles += n_tiles
+            lineage = (f"pages>latest_per_url>extract>parse_geo>validity>"
+                       f"assign(z={z})>clip>quantize>collect_list"
+                       f"|observed_feature_rows={feature_rows}")
+            summary = zoom_summary_row(spark, z, stage, run_id, started, lineage,
+                                       input_rows=feature_rows, output_rows=n_tiles)
+            if n_tiles > 0:
+                written = spark.read.parquet(out_path)
+                ckpt.commit(summary.unionByName(
+                    partition_metrics(written, z, stage, run_id, started, lineage)))
+            else:
+                # zero-tile zooms still commit: completed_zooms must record them
+                # or every resume re-runs the empty zoom forever
+                ckpt.commit(summary)
+    finally:
+        if owns_cache:
+            features.unpersist()
     return {"zooms_run": len(todo), "zooms_skipped": skipped, "tiles": total_tiles}

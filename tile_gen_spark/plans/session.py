@@ -4,6 +4,18 @@ Settings chosen for the 100 TB design point, applied identically in the
 local[32] sandbox: AQE on (skew-join splitting + partition coalescing,
 ``BASELINE.json:6,14``), Arrow enabled for every Python crossing
 (``BASELINE.json:15``), shuffle partitions sized to the parallelism.
+
+``SPARK_GRAFT_CPUS`` sets the ``local[N]`` width; it defaults to the CPUs
+this process may run on. For ``local`` masters the Python workers are forked
+from ``tile_gen_spark.plans.pydaemon`` instead of ``pyspark.daemon``, and the
+package root is put on their ``PYTHONPATH`` so that the daemon imports. The
+daemon drops ``pyspark.zip``, the py4j zip and the spark-core jar from the
+workers' ``sys.path`` when a directory install of the same pyspark is there,
+which takes a per-task ``importlib.invalidate_caches()`` from ~0.27 s to
+microseconds on CPython 3.11/3.12 (``BENCH/BASELINE.md``). Other masters get
+the stock daemon: under ``--py-files`` the package reaches executors only
+per task, too late to be a daemon. ``SPARK_GRAFT_EXTRA_CONF=
+"spark.python.daemon.module=pyspark.daemon"`` restores it locally too.
 """
 
 from __future__ import annotations
@@ -12,10 +24,20 @@ import os
 
 from pyspark.sql import SparkSession
 
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.dirname(
+    os.path.abspath(__file__))))
+
+
+def _usable_cpus() -> int:
+    """CPUs this process may run on (its affinity mask where the OS has one)."""
+    if hasattr(os, "sched_getaffinity"):
+        return len(os.sched_getaffinity(0))
+    return os.cpu_count() or 1
+
 
 def get_spark(app: str = "tile-gen-spark", master: str | None = None,
               shuffle_partitions: int | None = None) -> SparkSession:
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or _usable_cpus())
     master = master or f"local[{cpus}]"
     shuffle = shuffle_partitions or max(cpus * 2, 8)
     b = (
@@ -74,6 +96,9 @@ def get_spark(app: str = "tile-gen-spark", master: str | None = None,
             shm = os.path.join("/dev/shm", "spark-local")
             os.makedirs(shm, exist_ok=True)
             b = b.config("spark.local.dir", shm)
+    if master == "local" or master.startswith("local["):
+        b = (b.config("spark.python.daemon.module", "tile_gen_spark.plans.pydaemon")
+             .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT))
     # experiment passthrough: SPARK_GRAFT_EXTRA_CONF="k=v;k=v" — lets bench
     # A/Bs (codec, compress on/off, …) run without code edits; applied LAST
     # so an experiment can override any default above.
